@@ -17,7 +17,16 @@ semantics where they differ from SQL defaults:
 All of these are shuffle-aware: grouped aggregations are single-shuffle
 hash aggregations with map-side partial aggregation (Catalyst supplies
 partial_/final split automatically); window verbs shuffle once on the
-partition keys. Nothing here collects to the driver.
+partition keys.
+
+Driver contract: no verb collects rows to the driver. The ungrouped
+order-dependent verbs (cat -n, fraction -c, rank, step, slwin,
+fill-down, stats1 -s) and percentiles_rank range-partition instead of
+running a single-task window, and collect one small carry table of
+O(partitions) entries (O(partitions x groups) for percentiles_rank).
+Every such table goes back into the plan through ``_attach``: a
+literal map up to ``_EDGE_LITERAL_MAX`` entries, a broadcast left-join
+past it — so no plan grows with group or partition count.
 """
 
 from __future__ import annotations
@@ -36,21 +45,68 @@ def _cols(c: str | Sequence[str]) -> list[str]:
     return [c] if isinstance(c, str) else list(c)
 
 
-def _percentile_exact(col: str, p: float, interpolated: bool) -> Column:
-    """Miller percentile semantics (pkg/bifs/percentiles.go:193-208).
+# A carry table inlined as a literal map grows the Catalyst plan by one
+# entry per key PER USE SITE (the plan-size blowup class
+# dsl/compiler.py:85 warns about); past this budget _attach
+# broadcast-left-joins the table instead — same values, bounded plan.
+_EDGE_LITERAL_MAX = 10_000
 
-    Non-interpolated: sorted_values[clamp(int(p/100*n), 0, n-1)].
-    Interpolated: R type 7 == SQL percentile_cont == Spark `percentile`.
+
+def _attach(df: DataFrame, key: Column, table: dict, name: str, dtype) -> DataFrame:
+    """Add column ``name`` = ``table[key]``, NULL where the key is missing.
+
+    ``table`` is a small driver-side carry table (keys all int or all
+    str; ``dtype`` is the value type, a DataType or DDL string). Up to
+    _EDGE_LITERAL_MAX entries it is a literal map lookup; past that a
+    broadcast left-join, so the plan never grows with the table.
     """
-    if interpolated:
-        return F.expr(f"percentile({col}, {p / 100.0})")
-    # sort_array(collect_list(x))[int(p*n/100)] — element-valued, so it
-    # matches any exact oracle bit-for-bit. Fine at test scale; at 100 TB
-    # use the sketch variants in mlrsketch.verbs.sketch instead.
-    arr = F.array_sort(F.collect_list(F.col(col)))
-    n = F.size(arr)
-    idx = F.least(F.greatest(F.floor(F.lit(p / 100.0) * n).cast("int"), F.lit(0)), n - 1)
-    return F.get(arr, idx)
+    from pyspark.sql.types import DataType, DecimalType, FractionalType
+
+    table = {k: v for k, v in table.items() if v is not None}
+    kt = "string" if any(isinstance(k, str) for k in table) else "bigint"
+    if not table:
+        return df.withColumn(name, F.lit(None).cast(dtype))
+    if len(table) <= _EDGE_LITERAL_MAX:
+        lits = [x for k, v in table.items() for x in (F.lit(k).cast(kt), F.lit(v).cast(dtype))]
+        return df.withColumn(name, F.create_map(*lits)[key])
+    dt = dtype if isinstance(dtype, DataType) else DataType.fromDDL(dtype)
+    if isinstance(dt, FractionalType):  # int carries (e.g. a 0 seed) verify as floats
+        import decimal
+
+        conv = decimal.Decimal if isinstance(dt, DecimalType) else float
+        table = {k: conv(v) for k, v in table.items()}
+    tbl = df.sparkSession.createDataFrame(
+        list(table.items()), f"__ak {kt}, `{name}` {dt.simpleString()}"
+    )
+    return (
+        df.withColumn("__ak", key.cast(kt))
+        .join(F.broadcast(tbl), "__ak", "left")
+        .drop("__ak")
+    )
+
+
+def _exclusive_prefix(per_pid: dict) -> tuple[dict, object]:
+    """({pid: sum of the values of all EARLIER pids}, grand total) —
+    the carry of an additive running aggregate over range partitions.
+    NULL values add nothing; sums run in pid order."""
+    out, acc = {}, 0
+    for pid in sorted(per_pid):
+        out[pid] = acc
+        if per_pid[pid] is not None:
+            acc += per_pid[pid]
+    return out, acc
+
+
+# concat_ws SKIPS NULL arguments, so a bare cast lets a NULL key part
+# vanish: NULL collides with '' and (NULL, 'x') with ('x', NULL)
+_NULL_PART = "\x00NULL"
+
+
+def _key_parts(cols: Sequence[str]) -> list[Column]:
+    """String parts of a composite key, for ``concat_ws``: NULL becomes
+    the explicit tag _NULL_PART, non-NULL values keep their plain string
+    cast — so seeded hash keys over non-NULL columns are unchanged."""
+    return [F.coalesce(F.col(c).cast("string"), F.lit(_NULL_PART)) for c in _cols(cols)]
 
 
 # percentile-family accumulators share ONE keeper per field, exactly like
@@ -628,26 +684,17 @@ def fraction(
             r["__pid"]: float(r["s"] or 0.0)
             for r in ordered.groupBy("__pid").agg(F.sum(value).alias("s")).collect()
         }
-        carries, acc = {}, 0.0
-        for pid in sorted(sums):
-            carries[pid] = acc
-            acc += sums[pid]
-        carry = (
-            F.create_map(*[F.lit(x) for kv in carries.items() for x in kv])
-            if carries
-            else F.create_map()
-        )
+        carries, total = _exclusive_prefix(sums)
+        ordered = _attach(ordered, F.col("__pid"), carries, "__carry", "double")
         w_in = (
             Window.partitionBy("__pid")
             .orderBy(*[F.col(c) for c in order_cols])
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )
-        num = F.sum(value).over(w_in) + F.coalesce(
-            carry[F.col("__pid")], F.lit(0.0)
-        )
+        num = F.sum(value).over(w_in) + F.coalesce(F.col("__carry"), F.lit(0.0))
         return ordered.withColumn(
-            f"{value}_cumulative_{suffix}", F.when(present, scale * num / F.lit(acc))
-        ).drop("__pid")
+            f"{value}_cumulative_{suffix}", F.when(present, scale * num / F.lit(total))
+        ).drop("__pid", "__carry")
 
     if by:
         denom = F.sum(value).over(Window.partitionBy(*by))
@@ -901,18 +948,12 @@ def global_row_number(
         .agg(F.count(F.lit(1)).alias("cnt"))
         .collect()
     }
-    offsets = {}
-    acc = 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    off = F.create_map(
-        *[F.lit(x) for kv in offsets.items() for x in kv]
-    ) if offsets else F.create_map()
+    offsets, _ = _exclusive_prefix(counts)
+    tagged = _attach(tagged, pid_of, offsets, "__off", "bigint")
     local = F.col("__mid").bitwiseAND(F.lit((1 << 33) - 1)).cast("long")
     numbered = tagged.withColumn(
-        out, local + 1 + F.coalesce(off[pid_of], F.lit(0))
-    ).withColumn("__pid", pid_of).drop("__mid")
+        out, local + 1 + F.coalesce(F.col("__off"), F.lit(0))
+    ).withColumn("__pid", pid_of).drop("__mid", "__off")
     return numbered if keep_pid else numbered.drop("__pid")
 
 
@@ -957,7 +998,7 @@ def percentiles_rank(
     ordered = ordered.localCheckpoint(eager=True)  # pin range placement
     tagged = ordered.withColumn("__mid", F.monotonically_increasing_id())
     pid_of = F.shiftright("__mid", 33).cast("int")
-    gkey = F.concat_ws("\x01", *[F.col(c).cast("string") for c in by]) if by else F.lit("")
+    gkey = F.concat_ws("\x01", *_key_parts(by)) if by else F.lit("")
     # per-(partition, group) row counts; groups are contiguous in the
     # range-sorted layout, so these yield both start indexes and offsets
     pg = (
@@ -971,23 +1012,20 @@ def percentiles_rank(
     # adj(pid, g): global in-group rank = partition-local row index
     # + adj, where adj = (rows of g in earlier partitions) - (g's start
     # index within this partition)
-    adj_entries: list[tuple[str, int]] = []
+    adj: dict[str, int] = {}
     n_of: dict[str, int] = {}
     for g, rows in per_group.items():
         rows.sort(key=lambda r: r["__pid"])
         run = 0
         for r in rows:
             start_local = r["__m0"] & ((1 << 33) - 1)
-            adj_entries.append((f"{r['__pid']}|{g}", run - start_local))
+            adj[f"{r['__pid']}|{g}"] = run - start_local
             run += r["__c"]
         n_of[g] = run
-    adj = F.create_map(
-        *[F.lit(x) for kv in adj_entries for x in kv]
-    ) if adj_entries else F.create_map()
     local = F.col("__mid").bitwiseAND(F.lit((1 << 33) - 1)).cast("long")
-    ranked = tagged.withColumn(
-        "__rk", local + adj[F.concat(pid_of.cast("string"), F.lit("|"), gkey)]
-    )
+    ranked = _attach(
+        tagged, F.concat(pid_of.cast("string"), F.lit("|"), gkey), adj, "__adj", "bigint"
+    ).withColumn("__rk", local + F.col("__adj"))
     # needed 0-based ranks per group with interpolation weights
     need_rows = []
     for g, n in n_of.items():
@@ -1164,17 +1202,14 @@ def fill_down(
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     updates = {}
-    for f in fields:
-        carry = None
-        for pid, v in carries[f].items():
-            if v is None:
-                continue
-            clause = F.when(F.col("__pid") == pid, F.lit(v))
-            carry = clause if carry is None else carry.when(F.col("__pid") == pid, F.lit(v))
+    for i, f in enumerate(fields):
+        ordered = _attach(ordered, F.col("__pid"), carries[f], f"__carry{i}",
+                          df.schema[f].dataType)
         filled = F.last(memcol(f), ignorenulls=True).over(w_in)
-        carryv = F.coalesce(filled, carry) if carry is not None else filled
-        updates[f] = fill_expr(f, carryv)
-    return ordered.withColumns(updates).drop("__pid")
+        updates[f] = fill_expr(f, F.coalesce(filled, F.col(f"__carry{i}")))
+    return ordered.withColumns(updates).drop(
+        "__pid", *[f"__carry{i}" for i in range(len(fields))]
+    )
 
 
 def clean_whitespace(df: DataFrame, fields: Sequence[str] | None = None) -> DataFrame:
@@ -1515,7 +1550,7 @@ def sample(
     key = _cols(key)
     if key:
         rk = F.md5(
-            F.concat_ws("\x01", F.lit(str(seed)), *[F.col(c).cast("string") for c in key])
+            F.concat_ws("\x01", F.lit(str(seed)), *_key_parts(key))
         )
     else:
         rk = F.rand(seed)
@@ -1729,14 +1764,6 @@ def _parse_stepper(s: str) -> tuple[str, int]:
     return s, 1
 
 
-# literal boundary maps inflate the Catalyst plan by len(edge_rows)
-# entries PER USE SITE (the plan-size blowup class dsl/compiler.py:85
-# warns about); past this budget _step_ungrouped's boundary lookup
-# becomes a tiny broadcast left-join per (offset, field) instead —
-# same values, bounded plan.
-_EDGE_LITERAL_MAX = 10_000
-
-
 def _step_ungrouped(
     df: DataFrame,
     steppers: Sequence[str],
@@ -1789,16 +1816,13 @@ def _step_ungrouped(
         ).withColumn("__gsz", F.count(F.lit(1)).over(Window.partitionBy("__pid")))
         gates = {}
         for f in values:
-            pairs = [
-                x
-                for r in edge_gate
-                for x in (F.lit(r["__n"]), F.lit(r[f"__p_{f}"]))
-            ]
-            bmap = F.create_map(*pairs) if pairs else F.create_map()
+            vbase = _attach(vbase, F.col("__n") + f_max,
+                            {r["__n"]: r[f"__p_{f}"] for r in edge_gate},
+                            f"__gb_{f}", "boolean")
             gp = F.when(
                 F.col("__gpos") <= F.col("__gsz") - f_max,
                 F.lead(F.col(f).isNotNull(), f_max).over(w_g),
-            ).otherwise(bmap[F.col("__n") + f_max])
+            ).otherwise(F.col(f"__gb_{f}"))
             gates[f] = F.when(
                 F.col("__n") + f_max <= F.lit(n_total),
                 F.coalesce(gp, F.lit(False)),
@@ -1817,7 +1841,7 @@ def _step_ungrouped(
     # than k from the partition edge; only the ≤k edge rows per
     # partition need a value from a neighboring partition, and those
     # source rows (the last/first k of each partition) are a tiny
-    # driver-collected broadcast map keyed by global __n. The previous
+    # driver-collected carry table keyed by global __n. The previous
     # implementation equi-joined on __n, which hash-shuffled the FULL
     # payload twice per distinct offset — the dominant exchange of this
     # verb at scale.
@@ -1836,25 +1860,6 @@ def _step_ungrouped(
             "__psz", F.count(F.lit(1)).over(Window.partitionBy("__pid"))
         )
 
-    def _edge_map(rows: list, col: str, dtype) -> Column:
-        pairs = []
-        for r in rows:
-            pairs.append(F.lit(r["__n"]))
-            pairs.append(F.lit(r[col]).cast(dtype))
-        return F.create_map(*pairs) if pairs else F.create_map()
-
-    def _edge_join(rows: list, col: str, dtype, k: int, bname: str):
-        """Broadcast-join fallback: left-join edge values keyed at the
-        TARGET row's __n (edge __n shifted by k) into column bname."""
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        nonlocal out
-        bdf = df.sparkSession.createDataFrame(
-            [(r["__n"] + k, r[col]) for r in rows],
-            StructType([StructField("__bn", LongType()), StructField(bname, dtype)]),
-        )
-        out = out.join(F.broadcast(bdf), out["__n"] == bdf["__bn"], "left").drop("__bn")
-
     if lag_offsets:
         max_lag = max(lag_offsets)
         # prev-caches see the GATED sequence (clearPrevValue pushes nil)
@@ -1869,27 +1874,18 @@ def _step_ungrouped(
             .select("__n", *[f"__v_{f}" for f in values])
             .collect()
         )
-        use_join = len(edge_tail) > _EDGE_LITERAL_MAX
-        # one map per FIELD, shared across offsets (not one per use)
-        lag_maps = {} if use_join else {
-            f: _edge_map(edge_tail, f"__v_{f}", df.schema[f].dataType)
-            for f in values
-        }
+        tails = {f: {r["__n"]: r[f"__v_{f}"] for r in edge_tail} for f in values}
         for k in sorted(lag_offsets):
             for f in values:
                 name = f"__lag{k}_{f}"
-                if use_join:
-                    _edge_join(edge_tail, f"__v_{f}", df.schema[f].dataType,
-                               k, name + "_b")
-                    boundary = F.col(name + "_b")
-                else:
-                    boundary = lag_maps[f][F.col("__n") - k]
+                out = _attach(out, F.col("__n") - k, tails[f], name + "_b",
+                              df.schema[f].dataType)
                 out = out.withColumn(
                     name,
                     F.when(
                         F.col("__pos") > k,
                         F.lag(f"__v_{f}", k).over(w_ord),
-                    ).otherwise(boundary),
+                    ).otherwise(F.col(name + "_b")),
                 )
     if lead_offsets:
         max_lead = max(lead_offsets)
@@ -1902,24 +1898,18 @@ def _step_ungrouped(
             .select("__n", *values)
             .collect()
         )
-        use_join = len(edge_head) > _EDGE_LITERAL_MAX
-        lead_maps = {} if use_join else {
-            f: _edge_map(edge_head, f, df.schema[f].dataType) for f in values
-        }
+        heads = {f: {r["__n"]: r[f] for r in edge_head} for f in values}
         for k in sorted(lead_offsets):
             for f in values:
                 name = f"__lead{k}_{f}"
-                if use_join:
-                    _edge_join(edge_head, f, df.schema[f].dataType, -k, name + "_b")
-                    boundary = F.col(name + "_b")
-                else:
-                    boundary = lead_maps[f][F.col("__n") + k]
+                out = _attach(out, F.col("__n") + k, heads[f], name + "_b",
+                              df.schema[f].dataType)
                 out = out.withColumn(
                     name,
                     F.when(
                         F.col("__pos") <= F.col("__psz") - k,
                         F.lead(f, k).over(w_ord),
-                    ).otherwise(boundary),
+                    ).otherwise(F.col(name + "_b")),
                 )
 
     # ---- running aggregates: per-partition prefix + driver-combined
@@ -1971,20 +1961,8 @@ def _step_ungrouped(
                         f"__FS_{f}_{label}"
                     ),
                 ]
-        exports = {
-            r["__pid"]: r for r in out.groupBy("__pid").agg(*agg_list).collect()
-        }
-
-    def _chain(per_pid: dict[int, object]):
-        expr = None
-        for pid, v in per_pid.items():
-            if v is None:
-                continue
-            if expr is None:
-                expr = F.when(F.col("__pid") == pid, F.lit(v))
-            else:
-                expr = expr.when(F.col("__pid") == pid, F.lit(v))
-        return expr if expr is not None else F.lit(None)
+        exp_df = out.groupBy("__pid").agg(*agg_list)
+        exports = {r["__pid"]: r for r in exp_df.collect()}
 
     result_cols = {}
     for f in values:
@@ -2011,15 +1989,21 @@ def _step_ungrouped(
                 )
             elif s in ("rsum", "rprod", "counter"):
                 key = {"rsum": "__sum_", "rprod": "__prod_", "counter": "__cnt_"}[s]
-                acc_off: dict[int, object] = {}
-                running = 0 if s in ("rsum", "counter") else 1.0
-                for pid in sorted(exports):
-                    acc_off[pid] = running
-                    v = exports[pid][key + f]
-                    if v is not None:
-                        running = (
-                            running + v if s in ("rsum", "counter") else running * v
-                        )
+                if s == "rprod":
+                    acc_off: dict[int, object] = {}
+                    running = 1.0
+                    for pid in sorted(exports):
+                        acc_off[pid] = running
+                        v = exports[pid][key + f]
+                        if v is not None:
+                            running *= v
+                else:
+                    acc_off, _ = _exclusive_prefix(
+                        {pid: r[key + f] for pid, r in exports.items()}
+                    )
+                name = f"__carry_{s}_{f}"
+                out = _attach(out, F.col("__pid"), acc_off, name,
+                              exp_df.schema[key + f].dataType)
                 vc = F.col(f"__v_{f}")
                 local = (
                     F.sum(vc).over(run_pid)
@@ -2028,11 +2012,10 @@ def _step_ungrouped(
                     if s == "counter"
                     else F.product(vc).over(run_pid)
                 )
-                offc = _chain(acc_off)
                 if s == "rprod":
-                    e = local * F.coalesce(offc, F.lit(1.0))
+                    e = local * F.coalesce(F.col(name), F.lit(1.0))
                 else:
-                    e = local + F.coalesce(offc, F.lit(0))
+                    e = local + F.coalesce(F.col(name), F.lit(0))
                 result_cols[f"{f}_{s.replace('-', '_')}"] = F.when(present, e)
             elif s == "from-first":
                 first_v = None
@@ -2068,7 +2051,8 @@ def _step_ungrouped(
                     c_prev = (beta ** n_p) * (alpha * S + (1 - alpha) * FS)
                 else:
                     c_prev = (beta ** n_p) * (alpha * S) + (beta ** n_p) * c_prev
-            carry_expr = _chain(carry)
+            out = _attach(out, F.col("__pid"), carry, f"__carry_ewma_{f}_{label}", "double")
+            carry_expr = F.col(f"__carry_ewma_{f}_{label}")
             s1 = F.col(f"__s1_{f}_{label}")
             fs = F.first(F.col(f"__sc_{f}_{label}"), ignorenulls=True).over(run_pid)
             i_f = F.col(f"__i_{f}")
@@ -2129,22 +2113,15 @@ def slwin(
             )
             .collect()
         }
-        off_s, off_n, rs, rn = {}, {}, 0.0, 0
-        total_rows = 0
-        for pid in sorted(exports):
-            off_s[pid], off_n[pid] = rs, rn
-            s_, n_, rows_ = exports[pid]
-            rs += s_ or 0.0
-            rn += n_
-            total_rows += rows_
-        def chain(d, default):
-            e = None
-            for pid, v in d.items():
-                e = (e.when if e is not None else F.when)(F.col("__pid") == pid, F.lit(v))
-            return F.coalesce(e, F.lit(default)) if e is not None else F.lit(default)
-        pre = pre.withColumn("__gs", F.coalesce(F.col("__ps"), F.lit(0.0)) + chain(off_s, 0.0)).withColumn(
-            "__gn", F.col("__pc") + chain(off_n, 0)
-        )
+        off_s, _ = _exclusive_prefix({p: e[0] for p, e in exports.items()})
+        off_n, _ = _exclusive_prefix({p: e[1] for p, e in exports.items()})
+        total_rows = sum(e[2] for e in exports.values())
+        pre = _attach(pre, F.col("__pid"), off_s, "__os", "double")
+        pre = _attach(pre, F.col("__pid"), off_n, "__on", "bigint")
+        pre = pre.withColumn(
+            "__gs",
+            F.coalesce(F.col("__ps"), F.lit(0.0)) + F.coalesce(F.col("__os"), F.lit(0.0)),
+        ).withColumn("__gn", F.col("__pc") + F.coalesce(F.col("__on"), F.lit(0)))
         # prefix table joined at the window edges: hi = n + n_fwd
         # (clamped), lo = n - m_back - 1 (0 -> zero prefix)
         prefix = pre.select(F.col("__n").alias("__pn"), F.col("__gs").alias("__hs"), F.col("__gn").alias("__hn"))
@@ -2202,15 +2179,8 @@ def rank(df: DataFrame, value: str, by: Sequence[str] = (), descending: bool = F
         r["__pid"]: r["s"]
         for r in ordered.groupBy("__pid").agg(F.sum("__c").alias("s")).collect()
     }
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    off = (
-        F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv])
-        if offsets
-        else F.create_map()
-    )
+    offsets, _ = _exclusive_prefix(counts)
+    ordered = _attach(ordered, F.col("__pid"), offsets, "__off", "bigint")
     w_in = (
         Window.partitionBy("__pid")
         .orderBy(order)
@@ -2220,7 +2190,7 @@ def rank(df: DataFrame, value: str, by: Sequence[str] = (), descending: bool = F
         ordered.withColumn(
             "rank",
             F.coalesce(F.sum("__c").over(w_in), F.lit(0))
-            + F.coalesce(off[F.col("__pid")], F.lit(0))
+            + F.coalesce(F.col("__off"), F.lit(0))
             + 1,
         )
         .select(value, "rank")
@@ -2580,7 +2550,7 @@ def bootstrap_hash(df: DataFrame, key: Sequence[str], seed: int = 42) -> DataFra
     shape (no RNG state, embarrassingly parallel, reproducible under
     any re-partitioning / task retry)."""
     key = _cols(key)
-    h = md5_60(F.concat_ws(":", F.lit(str(seed)), *[F.col(k).cast("string") for k in key]))
+    h = md5_60(F.concat_ws(":", F.lit(str(seed)), *_key_parts(key)))
     c = poisson1_mult(h)
     return (
         df.withColumn("__bc", c)
@@ -2605,7 +2575,10 @@ def bootstrap_ci_hash(
     poisson1(md5_60(seed:b:key)). Boot means accumulate in integer
     cents (sum(c*round(100*v)) / (100*sum(c))) so the sums are EXACT in
     any engine and the lo/hi quantiles over the n_boot means interpolate
-    over identical doubles — the whole statistic is oracle-exact.
+    over identical doubles — the whole statistic is oracle-exact. The
+    cents scale QUANTIZES every value to 2 decimals first (half-up), so
+    values with finer precision are rounded before anything is summed.
+    Rows whose value is NULL are dropped, as stats1 skips them.
 
     Scale shape: one explode (x n_boot), one partial-aggregated groupBy
     on (by, b), one tiny groupBy on (by) — no per-group materialization
@@ -2613,9 +2586,8 @@ def bootstrap_ci_hash(
     Output: (by..., {value}_mean, {value}_ci_lo, {value}_ci_hi)."""
     by, key = _cols(by), _cols(key)
     cents = F.round(F.col(value) * 100).cast("long")
-    base = df.select(
-        *by, cents.alias("__cents"),
-        F.concat_ws(":", *[F.col(k).cast("string") for k in key]).alias("__k"),
+    base = df.filter(F.col(value).isNotNull()).select(
+        *by, cents.alias("__cents"), F.concat_ws(":", *_key_parts(key)).alias("__k")
     )
     boots = base.withColumn("__b", F.explode(F.sequence(F.lit(0), F.lit(n_boot - 1))))
     h = md5_60(F.concat_ws(":", F.lit(str(seed)), F.col("__b").cast("string"), F.col("__k")))
@@ -2936,12 +2908,11 @@ def stats1_iterative(
         carries[f] = cc
 
     def _carry(f: str, idx: int, cast: str = "double") -> Column:
-        pairs = [
-            x
-            for pid, tup in carries[f].items()
-            for x in (F.lit(pid), F.lit(tup[idx]).cast(cast))
-        ]
-        return F.create_map(*pairs)[F.col("__pid")] if pairs else F.lit(None)
+        nonlocal pre
+        name = f"__carry{idx}_{f}"
+        pre = _attach(pre, F.col("__pid"),
+                      {pid: tup[idx] for pid, tup in carries[f].items()}, name, cast)
+        return F.col(name)
 
     out_cols: dict[str, Column] = {}
     for f in values:

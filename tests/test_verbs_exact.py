@@ -314,3 +314,54 @@ def test_percentiles_rank_matches_window_free(spark):
         n = 10_001 // 3 + (1 if int(r["g"]) < 10_001 % 3 else 0)
         vals = sorted(float(x["v"]) for x in df.filter(F.col("g") == r["g"]).collect())
         assert r["v_p30"] == vals[min(max(int(0.3 * n), 0), n - 1)]
+
+
+def test_bootstrap_ci_hash_skips_null_values(spark):
+    """NULL values take no part in the boot means: the CI must bracket
+    the mean of the non-NULL values (a NULL row counted in the boot
+    denominator would drag every replicate mean toward zero)."""
+    df = spark.range(0, 2000).select(
+        (F.col("id") % 2).cast("string").alias("g"),
+        F.when(F.col("id") % 3 != 0, F.col("id") * 0.25 + 10).alias("v"),
+        F.col("id").alias("k"),
+    )
+    exp = {r["g"]: r["m"] for r in df.groupBy("g").agg(F.avg("v").alias("m")).collect()}
+    rows = ev.bootstrap_ci_hash(df, "v", key=["k"], by=["g"], n_boot=50).collect()
+    assert len(rows) == 2
+    for r in rows:
+        assert abs(r["v_mean"] - exp[r["g"]]) < 1e-9
+        assert r["v_ci_lo"] <= exp[r["g"]] <= r["v_ci_hi"], r
+
+
+def test_percentiles_rank_null_group_keys_do_not_collide(spark):
+    """concat_ws drops NULL key parts, so a NULL group must be kept
+    apart from '' explicitly — and (NULL, 'x') from ('x', NULL) and
+    ('x', ''). Every group gets its own exact percentiles, equal to
+    Spark's percentile() over the same groupBy."""
+    one = spark.createDataFrame(
+        [(None, float(i)) for i in range(30)]
+        + [("", float(1000 + 3 * i)) for i in range(17)]
+        + [("y", float(-i)) for i in range(5)],
+        "g string, v double",
+    ).repartition(4)
+    two = spark.createDataFrame(
+        [("x", None, float(i)) for i in range(30)]
+        + [("x", "", float(500 + 2 * i)) for i in range(11)]
+        + [(None, "x", float(-7 * i)) for i in range(19)],
+        "a string, b string, v double",
+    ).repartition(4)
+    for df, by in ((one, ["g"]), (two, ["a", "b"])):
+        got = {
+            tuple(r[c] for c in by): (r["v_p50"], r["v_p90"])
+            for r in ev.percentiles_rank(df, "v", [50, 90], by=by).collect()
+        }
+        ref = {
+            tuple(r[c] for c in by): (r["a50"], r["a90"])
+            for r in df.groupBy(*by).agg(
+                F.expr("percentile(v, 0.5)").alias("a50"),
+                F.expr("percentile(v, 0.9)").alias("a90"),
+            ).collect()
+        }
+        assert set(got) == set(ref), (by, got)
+        for k in ref:
+            assert all(abs(x - y) < 1e-9 for x, y in zip(got[k], ref[k])), (by, k, got[k], ref[k])
